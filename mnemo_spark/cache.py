@@ -64,6 +64,8 @@ _BROADCASTS: list = []  # sc.broadcast handles created by kernels
 # and any still-running plan that touches an evicted one re-fetches
 # from the driver (unpersist, not destroy — degrade-to-refetch).
 _BROADCAST_LIMIT = int(os.environ.get("MNEMO_BROADCAST_TRACK_LIMIT", "64"))
+# bytes per partition when a pinned or committed frame is compacted
+COMPACT_TARGET_BYTES = 64 << 20
 
 
 def track_broadcast(bc) -> None:
@@ -275,7 +277,7 @@ def cached_value(build, *key_parts, key_plan: DataFrame):
 
 def _size_coalesced(
     df: DataFrame,
-    target_bytes: int = 64 << 20,
+    target_bytes: int = COMPACT_TARGET_BYTES,
     max_parts: int | None = None,
 ) -> DataFrame:
     """Narrow-coalesce df to ceil(sizeInBytes estimate / target_bytes)

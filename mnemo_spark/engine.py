@@ -30,6 +30,9 @@ side effects are anti-functional").
 
 from __future__ import annotations
 
+import math
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -44,6 +47,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from mnemo_spark.cache import COMPACT_TARGET_BYTES
 from mnemo_spark.functions.embedder import token_bucket
 from mnemo_spark.functions.text import tokens
 from mnemo_spark.io import local_frame, localize_small
@@ -127,6 +131,30 @@ RECALL_LANE_OVERFETCH = 3  # recall.rs:397: each lane feeds its top
 # resolves to k * this. Pass lane_limit=None for full-lane fusion
 # (the opt-in exactness mode).
 AUTO_LANE_LIMIT = object()  # sentinel: "use the reference default"
+
+
+def _commit(df: DataFrame) -> DataFrame:
+    """localCheckpoint df, then narrow-coalesce the checkpointed
+    blocks to max(defaultParallelism, ceil(bytes / 64 MiB)) partitions
+    when that is fewer than it has. Bytes are the checkpoint's own
+    stored size, not a Catalyst estimate. The coalesce comes AFTER the
+    checkpoint so the stage that computes df keeps its parallelism;
+    reads of the committed frame then pay one task per ~64 MiB (or
+    per core) instead of one per partition every write appended."""
+    cp = df.localCheckpoint(eager=True)
+    sc = cp.sparkSession.sparkContext
+    try:
+        rdd = cp._jdf.queryExecution().analyzed().rdd()
+        current = rdd.getNumPartitions()
+        nbytes = sum(
+            i.memSize() + i.diskSize()
+            for i in sc._jsc.sc().getRDDStorageInfo()
+            if i.id() == rdd.id()
+        )
+    except Py4JError:  # layout tuning is best-effort
+        return cp
+    parts = max(sc.defaultParallelism, math.ceil(nbytes / COMPACT_TARGET_BYTES))
+    return cp.coalesce(parts) if parts < current else cp
 
 
 class MnemoSparkEngine:
@@ -247,12 +275,15 @@ class MnemoSparkEngine:
         (agent loops, test scenarios) call this at step boundaries to
         keep each action O(current verb). Results are identical —
         only physical lineage is cut; the known-empty flags carry
-        because truncation preserves emptiness."""
+        because truncation preserves emptiness.
+
+        The committed layout is bounded (`_commit`): each write's
+        union would otherwise add its partitions to the store for
+        good, and every later scan pays one task per partition."""
         mem_empty = self._memories_known_empty
         ev_empty = self._events_known_empty
         out = self._clone(
-            memories=self.memories.localCheckpoint(eager=True),
-            events=self.events.localCheckpoint(eager=True),
+            memories=_commit(self.memories), events=_commit(self.events)
         )
         out._memories_known_empty = mem_empty
         out._events_known_empty = ev_empty
@@ -637,12 +668,12 @@ class MnemoSparkEngine:
 
         Same values as the per-row `_embed` expression, computed
         RELATIONALLY: explode tokens → (id, bucket) counts → per-id
-        map + L2 → one O(dim) map-lookup assembly per row. The
-        per-row HOF form evaluates `size(filter(buckets, = b))` for
-        every bucket — dim × |tokens| interpreted-lambda calls per
-        ROW, which measured ~80 s to write 500 real documents
-        (tools/engine_probe.py); this form is one codegen'd shuffle,
-        linear in corpus tokens, like every other corpus operator."""
+        map + L2 → one O(dim) map-lookup assembly per row. Writes
+        use this form, not the per-row `_embed`: that fold rebuilds a
+        dim-long array per token in interpreted lambdas, which
+        measured about twice as slow as this codegen'd shuffle on a
+        2,000-document write (4 cores); the ~0.15 s it saves on a
+        40-row write does not pay for a second write path."""
         cnt = (
             df.select("id", F.explode(tokens(F.col(text_col))).alias("_t"))
             .withColumn("_b", token_bucket(F.col("_t"), self.dim))
@@ -706,26 +737,39 @@ class MnemoSparkEngine:
         ).drop("_newemb")
 
     def _embed(self, content):
-        """Dense hash-bag embedding as a per-row expression: token
-        buckets → count vector → L2 normalize via JVM-side HOFs.
-        O(dim × tokens) interpreted work per row — used ONLY for the
-        single-row query vector and as the no-id-column fallback;
-        batch writes go through `_hash_bag_dense` (relational, linear
-        in corpus tokens). (The corpus-scale sparse form lives in
+        """Dense hash-bag embedding as a per-row expression, bit-equal
+        to `_hash_bag_dense`: one pass over the token buckets folds
+        them into a zero count vector while keeping the running sum of
+        squared counts (adding 1 to a count c adds 2c + 1), so the L2
+        norm is bound once, in the fold's finish step. Every
+        intermediate is evaluated once per row: O(tokens × dim)
+        interpreted work. Used for query vectors and as the
+        no-id-column fallback; batch writes go through
+        `_hash_bag_dense`. (The corpus-scale sparse form lives in
         functions.embedder.)"""
-        toks = tokens(content)
-        buckets = F.transform(toks, lambda t: token_bucket(t, self.dim))
-        counts = F.transform(
-            F.sequence(F.lit(0), F.lit(self.dim - 1)),
-            lambda b: F.size(F.filter(buckets, lambda x: x == b)).cast("double"),
+        buckets = F.transform(
+            tokens(content), lambda t: token_bucket(t, self.dim)
         )
-        l2 = F.sqrt(
-            F.aggregate(counts, F.lit(0.0), lambda acc, x: acc + x * x)
+        zero = F.struct(
+            F.array_repeat(F.lit(0.0), self.dim).alias("c"),
+            F.lit(0.0).alias("ss"),
         )
-        return F.when(
-            l2 > 0,
-            F.transform(counts, lambda x: (x / l2).cast("float")),
-        ).otherwise(F.lit(None).cast("array<float>"))
+
+        def add(acc, b):
+            return F.struct(
+                F.transform(
+                    acc["c"], lambda v, i: F.when(i == b, v + 1.0).otherwise(v)
+                ).alias("c"),
+                (acc["ss"] + 2.0 * F.element_at(acc["c"], b + 1) + 1.0).alias("ss"),
+            )
+
+        def finish(acc):
+            l2 = F.sqrt(acc["ss"])
+            return F.when(
+                l2 > 0, F.transform(acc["c"], lambda x: (x / l2).cast("float"))
+            ).otherwise(F.lit(None).cast("array<float>"))
+
+        return F.aggregate(buckets, zero, add, finish)
 
     # -- visibility (J1) ------------------------------------------------
 

@@ -38,11 +38,6 @@ def content_hash(content: Column, agent_id: Column, ts: Column) -> Column:
     )
 
 
-def chain_step(prev: Column, curr_hash: Column) -> Column:
-    """One chain link: sha256(content_hash ‖ prev) (hash.rs:17-31)."""
-    return F.sha2(F.concat(curr_hash, prev), 256)
-
-
 def chain_head_agg(ordered_hashes: Column) -> Column:
     """Fold an ordered array of hex hashes to the chain head.
 

@@ -56,14 +56,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(n > 0, d / n)
 
 
-def squared_l2(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(_dbl(a), _dbl(b), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def cosine_matrix(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     """(n, m) guarded cosine of two row-vector matrices — THE shared
     convention for every cell-assignment / probe site (index-time

@@ -335,10 +335,6 @@ def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
     return spark.createDataFrame(pdf, schema=schema).coalesce(1)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for spark.sql use."""
     for name in TABLES:

@@ -131,28 +131,6 @@ def _minhash_wide(
     return sh.groupBy("_id").agg(*aggs)
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    num_hashes: int = 12,
-    shingle_k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """MinHash signature per doc: for permutation s,
-    min((A_s·h0 + B_s) mod P) over shingle base hashes h0.
-
-    -> (_id, seed, minhash) long-form (docs with no shingles yield no
-    rows).
-    """
-    wide = _minhash_wide(docs, num_hashes, shingle_k, id_col, text_col)
-    return wide.select(
-        "_id",
-        F.posexplode(F.array(*[F.col(f"_m{s}") for s in range(num_hashes)])).alias(
-            "seed", "minhash"
-        ),
-    )
-
-
 def band_keys(
     docs: DataFrame,
     num_hashes: int = 12,

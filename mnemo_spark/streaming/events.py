@@ -93,24 +93,6 @@ def windowed_counts(
     )
 
 
-def sessionized_counts(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Session windows per user (gap-based) — the streaming twin of
-    the batch sessionize operator."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), F.col("user_id"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-
-
 def run_available_now(stream_df: DataFrame, table_name: str) -> None:
     """Drain everything currently available into an in-memory table
     (complete mode) and stop — the batch-equivalence harness used by

@@ -8,7 +8,9 @@ redact-preserving-chain, TTL sweep, tamper detection, tier behaviors.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -867,3 +869,89 @@ def test_chain_seq_continues_across_batches(spark):
     seqs = {r["id"]: r["chain_seq"] for r in eng.memories.collect()}
     assert seqs == {"c1": 1, "c2": 2, "c3": 3}
     assert eng.verify_integrity().filter(F.col("n_breaks") > 0).count() == 0
+
+
+def test_query_embedding_bit_equals_write_embedding(spark, sf_dir):
+    """The per-row query form (`_embed`) and the relational write form
+    (`_hash_bag_dense`) must produce byte-identical vectors, NULL where
+    the text has no tokens — otherwise a stored memory's self-recall
+    score drifts from 1.0."""
+    eng = MnemoSparkEngine(spark)
+    edge = spark.createDataFrame(
+        [
+            ("null", None),
+            ("empty", ""),
+            ("punct", "!!! ???"),
+            ("repeat", "a a a a b"),
+            ("unicode", "İstanbul KELVIN ß straße Ǆ"),
+        ],
+        "id string, content string",
+    )
+    docs = (
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        .orderBy("doc_id")
+        .limit(200)
+        .select(F.col("doc_id").cast("string").alias("id"), F.col("text").alias("content"))
+    )
+    rows = edge.unionByName(docs).localCheckpoint(eager=True)
+    query = {
+        r["id"]: r["v"]
+        for r in rows.select("id", eng._embed(F.col("content")).alias("v")).collect()
+    }
+    stored = {r["id"]: r["_vec"] for r in eng._hash_bag_dense(rows, "content").collect()}
+
+    def raw(v):
+        return None if v is None else np.asarray(v, dtype=np.float32).tobytes()
+
+    assert len(query) == 205
+    for key in ("null", "empty", "punct"):
+        assert query[key] is None and stored.get(key) is None
+    for key, vec in query.items():
+        assert raw(vec) == raw(stored.get(key)), key
+    assert query["repeat"] is not None and query["unicode"] is not None
+
+
+def test_committed_layout_is_bounded(spark, monkeypatch):
+    """materialized() coalesces each committed frame to at most
+    max(defaultParallelism, ceil(bytes / 64 MiB)) partitions (a few KB
+    here, so defaultParallelism); rows, chain integrity and recall
+    match a twin committed without the coalesce."""
+    from mnemo_spark import engine as engine_mod
+
+    batches = [
+        _mk_rows(spark, [
+            (f"L{b}_{j}", f"ag{j % 2}", f"note {b} {j} about paris and spark {j * b}",
+             "semantic", "private", 0.5, [], T0 + dt.timedelta(hours=b, minutes=j))
+            for j in range(3)
+        ])
+        for b in range(6)
+    ]
+
+    def commit_all():
+        eng, parts = MnemoSparkEngine(spark), []
+        for rows in batches:
+            eng = eng.remember_batch(rows).materialized()
+            parts += [f.rdd.getNumPartitions() for f in (eng.memories, eng.events)]
+        return eng, parts
+
+    bounded, parts = commit_all()
+    with monkeypatch.context() as m:
+        m.setattr(engine_mod, "_commit", lambda df: df.localCheckpoint(eager=True))
+        twin, twin_parts = commit_all()
+
+    cap = spark.sparkContext.defaultParallelism
+    assert max(parts) <= cap
+    assert max(twin_parts) > cap  # without the rule the layout grows
+    for frame in ("memories", "events"):
+        got, ref = getattr(bounded, frame), getattr(twin, frame)
+        assert sorted(got.collect()) == sorted(ref.collect())
+    assert bounded.verify_integrity().filter(F.col("n_breaks") > 0).count() == 0
+
+    qdf = spark.createDataFrame(
+        [("q0", "paris notes"), ("q1", "spark")], "query_id string, query string"
+    )
+    now = T0 + dt.timedelta(days=1)
+    hits = bounded.recall("paris spark", "ag0", now=now).collect()
+    assert hits and hits == twin.recall("paris spark", "ag0", now=now).collect()
+    batch = sorted(bounded.recall_batch(qdf, "ag1", now=now).collect())
+    assert batch and batch == sorted(twin.recall_batch(qdf, "ag1", now=now).collect())
